@@ -81,7 +81,6 @@ _PRIORITY = [
     "exact_pairs_capped",
     # --- (3) re-confirmation: event_sessions + linkage core + r04 wave ---
     "event_sessions",
-    "score_pairs_grouped",
     "boilerplate_spans",
     "scrub_boilerplate",
     "event_variant_stats",

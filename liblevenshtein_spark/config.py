@@ -64,15 +64,9 @@ class LinkConfig:
     # logically identical and the per-batch blocking driver round-trip
     # disappears.
     skew_probe: bool = True
-    # Segments scheme: join on xxhash64(key) bigints instead of raw
-    # 'i|len|segment' strings (segments of multi-KB fingerprints otherwise
-    # dominate shuffle bytes). Complete: equal segments hash equal; a hash
-    # collision only adds a candidate pair that scoring rejects.
-    hash_block_keys: bool = True
 
     # --- scale knobs ------------------------------------------------------
     shuffle_partitions: int | None = None  # None -> leave session value
-    arrow_batch_size: int = 10_000
     cc_max_iterations: int = 50
     checkpoint_buckets: int = 64  # resume-ledger granularity (P9)
     # Clustering strategy (beyond the reference, which has no clustering):

@@ -31,7 +31,7 @@ from .operators.clustering import assign_clusters, fold_clusters
 from .operators.metrics import (banded_truth_pairs, bcubed,
                                 pairwise_confusion, rand_stats)
 from .operators.candidates import cross_source_pairs as cross_source_pairs_op
-from .operators.scoring import distance_udf
+from .operators.scoring import score_pairs
 from .operators.transduce import (
     add_terms,
     compile_dictionary,
@@ -266,41 +266,14 @@ def q_candidate_pairs_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_score_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         ship_package(spark)
-        pairs = q_candidate_pairs(spark, sf_dir)
-        canon = _canonical(spark, sf_dir)
-        fa = canon.select(F.col("conv_id").alias("id_a"), F.col("fingerprint").alias("fp_a"),
-                          F.col("fp_len").alias("len_a"))
-        fb = canon.select(F.col("conv_id").alias("id_b"), F.col("fingerprint").alias("fp_b"),
-                          F.col("fp_len").alias("len_b"))
-        dist = distance_udf(2, "standard")
-        return (
-            pairs.join(fa, "id_a").join(fb, "id_b")
-            .filter(F.abs(F.col("len_a") - F.col("len_b")) <= 2)
-            .select("id_a", "id_b", dist(F.col("fp_a"), F.col("fp_b")).alias("distance"))
-        )
+        return score_pairs(q_candidate_pairs(spark, sf_dir), _canonical(spark, sf_dir),
+                           LinkConfig(algorithm="standard", max_distance=2))
 
     return _cached_df(spark, sf_dir, "scored", build)
 
 
 def q_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q_score_pairs(spark, sf_dir).filter(F.col("distance") <= 2)
-
-
-def q_score_pairs_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5's dictionary-encoded scoring twin through the hard gate: the
-    cogroup path (operators.scoring.score_pairs_grouped) ships each distinct
-    fingerprint once per bucket instead of once per pair, the right
-    physical shape when entities appear in many candidate pairs (multi-KB
-    transcript fingerprints at 10^12-turn scale make Arrow transfer, not
-    the DP kernel, the bottleneck). Same oracle as score_pairs — the
-    encoding is a physical decomposition, any logical difference is a bug."""
-    from .operators.scoring import score_pairs_grouped
-
-    ship_package(spark)
-    pairs = q_candidate_pairs(spark, sf_dir)
-    canon = _canonical(spark, sf_dir).select("conv_id", "fingerprint")
-    conf = LinkConfig(algorithm="standard", max_distance=2)
-    return score_pairs_grouped(pairs, canon, conf, n_buckets=32)
 
 
 def q_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,18 +702,9 @@ def q_link_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = _sig_keys(spark, sf_dir)
     digit = F.substring(F.md5(F.col("conv_id")), 1, 1)
     pairs = cross_source_pairs_op(keys.filter(digit < "8"), keys.filter(digit >= "8"))
-    canon = _canonical(spark, sf_dir)
-    fa = canon.select(F.col("conv_id").alias("id_a"), F.col("fingerprint").alias("fp_a"),
-                      F.col("fp_len").alias("len_a"))
-    fb = canon.select(F.col("conv_id").alias("id_b"), F.col("fingerprint").alias("fp_b"),
-                      F.col("fp_len").alias("len_b"))
-    dist = distance_udf(2, "standard")
-    return (
-        pairs.join(fa, "id_a").join(fb, "id_b")
-        .filter(F.abs(F.col("len_a") - F.col("len_b")) <= 2)
-        .select("id_a", "id_b", dist(F.col("fp_a"), F.col("fp_b")).alias("distance"))
-        .filter(F.col("distance") <= 2)
-    )
+    scored = score_pairs(pairs, _canonical(spark, sf_dir),
+                         LinkConfig(algorithm="standard", max_distance=2))
+    return scored.filter(F.col("distance") <= 2)
 
 
 def q_similarity_soft_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1344,7 +1308,7 @@ def q_eval_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.metrics.threshold_sweep) against the same blocking-free
     banded truth as `eval_pairwise_f1` — the tuning curve for choosing the
     transducer's n (the reference fixes it per transducer, README.md:13-15).
-    Threshold 3 is the scored-stream cap (distance_udf's n+1 sentinel), so
+    Threshold 3 is the scored-stream cap (score_pairs' n+1 sentinel), so
     the sweep's top row also audits the sentinel convention cross-engine."""
     from .operators.metrics import threshold_sweep
 
@@ -3458,8 +3422,7 @@ LEFT JOIN pint pi ON pi.id_a = p.id_a AND pi.id_b = p.id_b"""
 # synthetic sf1 dir DuckDB materialized >100 GB on a hot signature and the
 # three banded-PPRL oracles are therefore excluded from the sf1 contract
 # waves (the ENGINE side distributes the same join under Spark/AQE and
-# feeds candidate-bounded Dice scoring — similarity_pprl is sf1-green in
-# CONTRACT_r05_sf1_wave2.json at 5.0M pairs).
+# feeds candidate-bounded Dice scoring).
 LINKAGE_ORACLES["pprl_candidates"] = DUCK_TRANSCRIPTS + _DUCK_PPRL_BITS + """,
 pband AS MATERIALIZED (
   SELECT id, bit // 16 AS band, string_agg(bit, ',' ORDER BY bit) AS band_sig
@@ -5311,8 +5274,6 @@ FROM k GROUP BY event_type""",
     "corpus_top_docs": """
 SELECT doc_id, n_chars, lang FROM documents
 ORDER BY n_chars DESC, doc_id ASC LIMIT 20""",
-    "score_pairs_grouped": DUCK_TRANSCRIPTS
-    + "SELECT id_a, id_b, distance FROM scored",
 }
 
 def _merge_plan_oracle(rounds: int) -> str:
@@ -5447,7 +5408,6 @@ DATA_QUERIES = {
     "corpus_top_docs": q_corpus_top_docs,
     # registered LAST on purpose: keeps every previously-registered entry's
     # position stable under a driver capture that truncates at 50 entries
-    "score_pairs_grouped": q_score_pairs_grouped,
     "boilerplate_spans": q_boilerplate_spans,
     "scrub_boilerplate": q_scrub_boilerplate,
 }
@@ -5497,17 +5457,9 @@ def q_waterfall_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"))
         .distinct()
     )
-    fa = reps.select(F.col("conv_id").alias("id_a"), F.col("fingerprint").alias("fp_a"),
-                     F.col("fp_len").alias("len_a"))
-    fb = reps.select(F.col("conv_id").alias("id_b"), F.col("fingerprint").alias("fp_b"),
-                     F.col("fp_len").alias("len_b"))
-    dist = distance_udf(2, "standard")
-    rep_matches = (
-        pairs.join(fa, "id_a").join(fb, "id_b")
-        .filter(F.abs(F.col("len_a") - F.col("len_b")) <= 2)
-        .select("id_a", "id_b", dist(F.col("fp_a"), F.col("fp_b")).alias("distance"))
-        .filter(F.col("distance") <= 2)
-    )
+    rep_matches = score_pairs(
+        pairs, reps, LinkConfig(algorithm="standard", max_distance=2)
+    ).filter(F.col("distance") <= 2)
     fuzzy = expand_rep_matches(rep_matches, mapping)
     return exact.unionByName(fuzzy)
 
@@ -6748,7 +6700,6 @@ def q_dedup_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate, the scheme choice is per-deployment."""
     from .operators.metrics import capture_recapture
     from .operators.ranking import sorted_neighborhood_pairs
-    from .operators.scoring import score_pairs
 
     ship_package(spark)
     conf = LinkConfig(algorithm="standard", max_distance=2)
@@ -6842,7 +6793,6 @@ def q_similarity_tool_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     desync the engines.  Cost: the encoded strings are ~60x shorter than
     fingerprints, so the kernel pass is noise; one groupBy builds the
     sequences."""
-    from .operators.scoring import score_pairs
 
     ship_package(spark)
     t = derive_transcripts(spark, sf_dir)
@@ -7377,7 +7327,6 @@ def q_similarity_token_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows floor at their capped bound rather than fabricating closeness.
     Cost: one narrow projection + the standard score path over the
     already-blocked stream."""
-    from .operators.scoring import score_pairs
 
     ship_package(spark)
     canon = _canonical(spark, sf_dir)

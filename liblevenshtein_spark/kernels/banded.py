@@ -10,11 +10,12 @@ MERGE_AND_SPLIT) are supported.
 Entry points:
 
 * ``batch_banded_distance(a_list, b_list, n, algorithm)`` — Python string
-  lists (the pandas-UDF path);
+  lists (the Arrow entry's non-ASCII fallback, and the kernel tests' API);
 * ``batch_banded_distance_arrow(a_arr, b_arr, n, algorithm)`` — pyarrow
   StringArrays, decoded straight from Arrow offset/data buffers into numpy
   matrices (vectorized; zero Python string objects) when the batch is
-  ASCII/Latin-1 — the mapInArrow path.
+  ASCII/Latin-1 — called by the mapInArrow scorer
+  (operators.scoring.score_attached), the engine's only scoring path.
 
 Vectorization is ACROSS pairs: the only Python-level loops are over DP rows
 (max string length) and the 2n+1 band columns — never over batch rows.
@@ -146,14 +147,14 @@ def batch_banded_distance_arrow(a_arr, b_arr, n: int, algorithm: str = "standard
     a batch actually contains multi-byte text (then the list fallback
     re-encodes to UTF-16-LE)."""
     _validate(n, algorithm, units)
-    import pyarrow as pa  # local import: pandas-UDF workers may not need it
+    import pyarrow as pa  # local import: list-only callers never need it
 
     bsz = len(a_arr)
     if bsz == 0:
         return np.empty(0, dtype=np.int32)
 
     def _fallback():
-        # Nulls become "" (same semantics as the pandas-UDF fillna("") path).
+        # Nulls score as "" (the fast path declines any batch with nulls).
         a_list = ["" if s is None else s for s in a_arr.to_pylist()]
         b_list = ["" if s is None else s for s in b_arr.to_pylist()]
         return batch_banded_distance(a_list, b_list, n, algorithm, units)

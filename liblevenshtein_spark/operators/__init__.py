@@ -16,7 +16,7 @@ from .metrics import blocking_key_drift, calibration_bins, capture_recapture
 from .sampling import stratified_sample
 from .pprl import bloom_band_candidates, bloom_encode, dice_pairs
 from .corpus_quality import trigram_lm_scores
-from .scoring import attach_texts, distance_udf, match_filter, score_pairs
+from .scoring import attach_texts, match_filter, score_pairs
 from .waterfall import exact_groups, exact_pairs, expand_rep_matches
 
 __all__ = [
@@ -26,7 +26,7 @@ __all__ = [
     "calibration_bins", "candidate_pairs", "canonicalize", "canopy_members",
     "canopy_pairs", "capture_recapture", "cluster_cohesion", "cluster_exemplars",
     "cluster_diff", "connected_components", "cross_source_pairs", "dice_pairs",
-    "distance_udf", "edge_support", "entity_history", "exact_groups",
+    "edge_support", "entity_history", "exact_groups",
     "exact_pairs", "expand_rep_matches", "golden_records",
     "incremental_lsh_pairs", "lsh_band_keys",
     "match_filter", "one_to_one", "profile_columns", "retract_entities",

@@ -43,9 +43,12 @@ def block_keys(entities: DataFrame, conf: LinkConfig, id_col: str = "conv_id",
         built = exploded_keys(entities, id_col, text_col, keys)
         return built, built
     k = conf.effective_segments
-    hashed = conf.hash_block_keys
-    built = exploded_keys(entities, id_col, text_col, segment_keys(text_col, k, hashed))
-    probes = exploded_keys(entities, id_col, text_col, probe_keys(text_col, k, n, hashed))
+    # Segments join on xxhash64(key) bigints instead of raw 'i|len|segment'
+    # strings (segments of multi-KB fingerprints otherwise dominate shuffle
+    # bytes). Complete: equal segments hash equal; a hash collision only
+    # adds a candidate pair that scoring rejects.
+    built = exploded_keys(entities, id_col, text_col, segment_keys(text_col, k, hashed=True))
+    probes = exploded_keys(entities, id_col, text_col, probe_keys(text_col, k, n, hashed=True))
     return built, probes
 
 

@@ -67,7 +67,8 @@ def banded_truth_pairs(canon: DataFrame, max_distance: int = 2,
     the same unit system as the scored distances; the code-point length
     band stays a valid necessary condition under utf16 too, because one
     UTF-16 code-unit edit changes the code-point count by at most one."""
-    from .scoring import distance_udf
+    from ..config import LinkConfig
+    from .scoring import score_attached
 
     left = canon.select(
         F.col("conv_id").alias("id_a"),
@@ -81,12 +82,14 @@ def banded_truth_pairs(canon: DataFrame, max_distance: int = 2,
         F.col("fingerprint").alias("fp_b"),
         F.col("fp_len").alias("_lk"),
     )
-    dist = distance_udf(max_distance, algorithm, units)
-    return (
+    conf = LinkConfig(algorithm=algorithm, max_distance=max_distance, units=units)
+    band = (
         left.join(right, "_lk")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", dist("fp_a", "fp_b").alias("distance"))
-        .filter(F.col("distance") <= max_distance)
+        .select("id_a", "id_b", "fp_a", "fp_b")
+    )
+    return score_attached(band, conf, text_a="fp_a", text_b="fp_b").filter(
+        F.col("distance") <= max_distance
     )
 
 

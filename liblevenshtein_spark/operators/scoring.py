@@ -1,11 +1,11 @@
 """P5/P6 — pairwise scoring with the vectorized banded-Levenshtein kernel,
 then the match filter (SURVEY.md §2.4).
 
-The only JVM -> Python crossing in the whole pipeline: an Arrow-batched
-pandas UDF over (text_a, text_b) columns calling
-kernels.banded.batch_banded_distance. Distances above the budget come back
-as the sentinel n+1 (reference B6 early termination), so `match_filter` is a
-plain native `distance <= n` predicate.
+Every banded distance the engine computes goes through `score_attached`:
+one mapInArrow node over (text_a, text_b) columns calling
+kernels.banded.batch_banded_distance_arrow. Distances above the budget come
+back as the sentinel n+1 (reference B6 early termination), so
+`match_filter` is a plain native `distance <= n` predicate.
 """
 
 from __future__ import annotations
@@ -16,29 +16,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..config import LinkConfig
-from ..kernels.banded import batch_banded_distance
 
-__all__ = ["distance_udf", "jaro_winkler_udf", "attach_texts", "score_pairs",
-           "score_attached", "score_pairs_pandas", "score_pairs_grouped",
-           "match_filter", "normalized_similarity"]
-
-
-def distance_udf(n: int, algorithm: str, units: str = "codepoint"):
-    """Arrow-batched pandas UDF computing the variant distance (or n+1).
-
-    Marked nondeterministic (it is in fact deterministic) so Catalyst never
-    duplicates the kernel: a filter over the distance column would otherwise
-    be pushed below the projection and evaluate the UDF a second time
-    (observed as two stacked ArrowEvalPython nodes = 2x kernel cost)."""
-
-    @pandas_udf("integer")
-    def dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = batch_banded_distance(
-            a.fillna("").tolist(), b.fillna("").tolist(), n, algorithm, units
-        )
-        return pd.Series(out)
-
-    return dist.asNondeterministic()
+__all__ = ["jaro_winkler_udf", "attach_texts", "score_pairs",
+           "score_attached", "match_filter", "normalized_similarity"]
 
 
 def jaro_winkler_udf():
@@ -46,9 +26,11 @@ def jaro_winkler_udf():
     (kernels.jaro.batch_jaro_winkler) — the standard SHORT-string
     comparator for name/word/key linkage. Keep long fingerprints on the
     banded Levenshtein path: JW's match window is inherently ±L/2, so its
-    cost is O(la·lb) per pair with no banded shortcut. Marked
-    nondeterministic for the same anti-duplication reason as
-    `distance_udf`."""
+    cost is O(la·lb) per pair with no banded shortcut.
+
+    Marked nondeterministic (it is in fact deterministic) so Catalyst never
+    duplicates the kernel: a filter over the similarity column would
+    otherwise be pushed below the projection and evaluate the UDF twice."""
 
     @pandas_udf("double")
     def jw(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -90,10 +72,9 @@ def score_pairs(
     pair, so Python only ever scores feasible pairs.
 
     Uses mapInArrow: the kernel decodes string columns straight from Arrow
-    buffers (no pandas Series, no Python string objects — ~3x the mixed
-    throughput of the pandas-UDF path), and a map-partitions node cannot be
-    duplicated or pushed through by Catalyst, so a downstream
-    distance-filter never re-runs the kernel."""
+    buffers (no pandas Series, no Python string objects), and a
+    map-partitions node cannot be duplicated or pushed through by Catalyst,
+    so a downstream distance-filter never re-runs the kernel."""
     return score_attached(attach_texts(pairs, entities, id_col, text_col), conf)
 
 
@@ -102,7 +83,9 @@ def score_attached(with_texts: DataFrame, conf: LinkConfig,
                    drop_texts: bool = True) -> DataFrame:
     """Scoring stage proper over a pre-joined frame carrying two text
     columns: native length-band filter, then the mapInArrow kernel. Split out
-    so benchmarks can checkpoint the join and time pure scoring.
+    for callers that attach the texts themselves (self-joins, truth scans,
+    transduce) and for benchmarks that checkpoint the join and time pure
+    scoring.
 
     Every column except the two text columns is passed through unchanged
     (original types preserved — non-string ids work), with `distance: int`
@@ -128,7 +111,7 @@ def score_attached(with_texts: DataFrame, conf: LinkConfig,
     def score(batches):
         from ..kernels.banded import batch_banded_distance_arrow
 
-        for batch in _prefetched(batches):
+        for batch in batches:
             d = batch_banded_distance_arrow(
                 batch.column(text_a), batch.column(text_b), n, algorithm, units
             )
@@ -138,157 +121,6 @@ def score_attached(with_texts: DataFrame, conf: LinkConfig,
             )
 
     return feasible.mapInArrow(score, out_schema)
-
-
-def _prefetched(batches, depth: int = 2):
-    """Optionally double-buffer the JVM->Python Arrow feed: a daemon thread
-    drains the input iterator (whose next() blocks on socket read + IPC
-    decode) into a small bounded queue, so deserializing batch k+1 overlaps
-    the kernel's compute on batch k.
-
-    DEFAULT OFF, by measurement (BASELINE.md "Arrow feed overlap"): when
-    Python workers >= cores — Spark's normal one-worker-per-task-slot layout
-    — a worker blocked on its socket read already yields its core to another
-    worker's kernel compute, so per-worker pipelining is redundant and the
-    extra thread costs 4-9% on the kernel-bound workload. Opt in with
-    LEVSPARK_PREFETCH=1 for deployments with more cores than workers
-    (oversized executors, GPU-adjacent decode stages)."""
-    import os
-
-    if os.environ.get("LEVSPARK_PREFETCH", "0") != "1":
-        yield from batches
-        return
-
-    import queue
-    import threading
-
-    q: queue.Queue = queue.Queue(maxsize=depth)
-    _END = object()
-
-    def reader():
-        try:
-            for b in batches:
-                q.put(b)
-            q.put(_END)
-        except BaseException as e:  # propagate into the consuming thread
-            q.put(e)
-
-    threading.Thread(target=reader, daemon=True).start()
-    while True:
-        item = q.get()
-        if item is _END:
-            return
-        if isinstance(item, BaseException):
-            raise item
-        yield item
-
-
-def score_pairs_pandas(
-    pairs: DataFrame,
-    entities: DataFrame,
-    conf: LinkConfig,
-    id_col: str = "conv_id",
-    text_col: str = "fingerprint",
-) -> DataFrame:
-    """pandas-UDF variant of score_pairs (kept for parity testing and as
-    the expression-style API; the mapInArrow path above is the fast one)."""
-    n = conf.max_distance
-    with_texts = attach_texts(pairs, entities, id_col, text_col)
-    feasible = with_texts.filter(
-        F.abs(F.length("text_a") - F.length("text_b")) <= n
-    )
-    dist = distance_udf(n, conf.algorithm, conf.units)
-    return feasible.select(
-        "id_a", "id_b", dist(F.col("text_a"), F.col("text_b")).alias("distance")
-    )
-
-
-def score_pairs_grouped(
-    pairs: DataFrame,
-    entities: DataFrame,
-    conf: LinkConfig,
-    id_col: str = "conv_id",
-    text_col: str = "fingerprint",
-    n_buckets: int = 128,
-) -> DataFrame:
-    """Dictionary-encoded scoring: same result as `score_pairs`, but each
-    distinct text crosses the JVM->Python boundary once per scoring bucket
-    instead of once per pair.
-
-    `score_pairs` ships (text_a, text_b) per pair, so an entity appearing in
-    k candidate pairs is serialized k times. Here pairs are hashed into
-    deterministic buckets; each bucket cogroups its (id_a, id_b) rows with
-    the distinct entity texts it references, and the kernel resolves ids to
-    texts Python-side (shared str objects, no copies). Transfer per bucket
-    = distinct texts + two small id columns.
-
-    Measured A/B (PLANS.md "Grouped vs per-pair scoring"): on the bench
-    heavy workload (~190 pairs/entity) the per-pair mapInArrow path still
-    wins ~1.8x at 210-byte fingerprints AND ~2x at 2 KB — with the
-    length-band prefilter both kernel cost and Arrow transfer scale
-    linearly in text length, so their ratio is length-invariant and the
-    cogroup's two extra shuffles + applyInPandas overhead never pay for
-    themselves on this shape. Kept as the parity-tested alternative
-    physical shape for transfer-bound regimes the sandbox can't produce
-    (e.g. IPC-constrained executors or far wider distance bands); it is
-    NOT the default anywhere."""
-    n = conf.max_distance
-    algorithm = conf.algorithm
-    units = conf.units
-    pb = pairs.select(
-        "id_a", "id_b",
-        F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-    # (bucket + 0) mints a fresh attribute so the later cogroup of pb with
-    # a pb-derived frame isn't flagged as an ambiguous self-join
-    refs = (
-        pb.select(
-            (F.col("bucket") + F.lit(0)).cast("int").alias("bucket"),
-            F.explode(F.array("id_a", "id_b")).alias(id_col),
-        )
-        .dropDuplicates(["bucket", id_col])
-    )
-    ents = refs.join(
-        entities.select(F.col(id_col), F.col(text_col).alias("_text")), id_col
-    ).select("bucket", id_col, "_text")
-
-    def score(key, pairs_pdf: pd.DataFrame, ents_pdf: pd.DataFrame) -> pd.DataFrame:
-        from ..kernels.banded import batch_banded_distance
-
-        lookup = dict(zip(ents_pdf[id_col], ents_pdf["_text"]))
-        texts_a = [lookup.get(i) for i in pairs_pdf["id_a"]]
-        texts_b = [lookup.get(i) for i in pairs_pdf["id_b"]]
-        known = [ta is not None and tb is not None for ta, tb in zip(texts_a, texts_b)]
-        feasible = [
-            k and abs(len(ta) - len(tb)) <= n
-            for k, ta, tb in zip(known, texts_a, texts_b)
-        ]
-        if not any(feasible):
-            return pd.DataFrame({"id_a": [], "id_b": [], "distance": []}).astype(
-                {"id_a": object, "id_b": object, "distance": "int32"}
-            )
-        sub = pairs_pdf.loc[feasible]
-        d = batch_banded_distance(
-            [t for t, f in zip(texts_a, feasible) if f],
-            [t for t, f in zip(texts_b, feasible) if f],
-            n, algorithm, units,
-        )
-        return pd.DataFrame(
-            {"id_a": sub["id_a"].values, "id_b": sub["id_b"].values, "distance": d}
-        )
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_schema = StructType([
-        StructField("id_a", pairs.schema["id_a"].dataType),
-        StructField("id_b", pairs.schema["id_b"].dataType),
-        StructField("distance", IntegerType()),
-    ])
-    return (
-        pb.groupBy("bucket")
-        .cogroup(ents.groupBy("bucket"))
-        .applyInPandas(score, out_schema)
-    )
 
 
 def match_filter(scored: DataFrame, conf: LinkConfig) -> DataFrame:

@@ -35,9 +35,9 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from liblevenshtein_spark import driver_queries as dq  # noqa: E402
+from liblevenshtein_spark import LinkConfig, driver_queries as dq  # noqa: E402
 from liblevenshtein_spark.functions.blocking import deletion_neighborhood  # noqa: E402
-from liblevenshtein_spark.operators.scoring import distance_udf  # noqa: E402
+from liblevenshtein_spark.operators.scoring import score_pairs  # noqa: E402
 from liblevenshtein_spark.operators.waterfall import (  # noqa: E402
     exact_groups, exact_pairs, expand_rep_matches,
 )
@@ -59,16 +59,7 @@ def _candidates(canon: DataFrame) -> DataFrame:
 
 
 def _score(pairs: DataFrame, canon: DataFrame) -> DataFrame:
-    fa = canon.select(F.col("conv_id").alias("id_a"), F.col("fingerprint").alias("fp_a"),
-                      F.col("fp_len").alias("len_a"))
-    fb = canon.select(F.col("conv_id").alias("id_b"), F.col("fingerprint").alias("fp_b"),
-                      F.col("fp_len").alias("len_b"))
-    dist = distance_udf(2, "standard")
-    return (
-        pairs.join(fa, "id_a").join(fb, "id_b")
-        .filter(F.abs(F.col("len_a") - F.col("len_b")) <= 2)
-        .select("id_a", "id_b", dist(F.col("fp_a"), F.col("fp_b")).alias("distance"))
-    )
+    return score_pairs(pairs, canon, LinkConfig(algorithm="standard", max_distance=2))
 
 
 def main() -> None:

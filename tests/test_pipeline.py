@@ -88,47 +88,64 @@ def test_pairwise_f1_gate(spark):
     assert f1 >= 0.99, (precision, recall)
 
 
-def test_score_pairs_grouped_matches_pairwise(spark):
-    """Dictionary-encoded grouped scoring must equal the per-pair path."""
-    from liblevenshtein_spark.config import LinkConfig
-    from liblevenshtein_spark.operators.scoring import score_pairs, score_pairs_grouped
+_SCORE_ENTS = [("a", "kitten"), ("b", "sitten"), ("c", "sittin"), ("d", "zzzzzzzzzz"),
+               ("e", "kitte"), ("f", ""), ("g", "cafés"), ("h", "cafes"),
+               ("i", "acfés"), ("j", "ab"), ("k", ""),
+               ("l", "\U0001D49Citten"), ("m", "\U0001D49Ditten")]
+_SCORE_PAIRS = [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d"), ("e", "a"), ("f", "e"),
+                ("g", "a"), ("g", "e"), ("g", "h"), ("i", "g"), ("f", "j"), ("f", "k"),
+                ("l", "a"), ("l", "m"), ("a", "missing")]
 
+
+@pytest.mark.parametrize("algorithm,units", [
+    ("standard", "codepoint"), ("transposition", "codepoint"),
+    ("merge_and_split", "codepoint"), ("standard", "utf16"),
+])
+def test_score_pairs_matches_oracle(spark, algorithm, units):
+    """score_pairs equals the pure-Python oracle capped at the n+1 sentinel,
+    on ASCII text and on non-ASCII text ("cafés" and the astral letters send
+    a batch down the Arrow entry's list fallback), including the empty
+    string. Under units='utf16' an astral character is two code units, so
+    the oracle runs on the surrogate-expanded text. Pairs outside the
+    code-point length band are dropped before the kernel, never scored, and
+    a pair naming an unknown id is dropped by the text attach."""
+    from liblevenshtein_spark.kernels.oracles import distance
+    from liblevenshtein_spark.operators.scoring import score_pairs
+
+    from test_utf16_units import u16_units
+
+    n = 2
+    ents = spark.createDataFrame(_SCORE_ENTS, "conv_id string, fingerprint string")
+    pairs = spark.createDataFrame(_SCORE_PAIRS, "id_a string, id_b string")
+    text = dict(_SCORE_ENTS)
+    units_of = u16_units if units == "utf16" else str
+    want = {
+        (a, b, min(distance(units_of(text[a]), units_of(text[b]), algorithm), n + 1))
+        for a, b in _SCORE_PAIRS
+        if a in text and b in text and abs(len(text[a]) - len(text[b])) <= n
+    }
+    conf = LinkConfig(algorithm=algorithm, max_distance=n, units=units)
+    got = {tuple(r) for r in score_pairs(pairs, ents, conf).collect()}
+    assert got == want
+    assert {d for _, _, d in want} == {0, 1, 2, n + 1}  # fixture spans the band
+    assert ("l", "a", 2 if units == "utf16" else 1) in want
+
+
+def test_score_pairs_runs_kernel_once(spark):
+    """A distance filter over the scored frame must not make Catalyst
+    evaluate the kernel twice: the executed plan holds exactly one
+    MapInArrow node."""
+    from liblevenshtein_spark.operators.scoring import score_pairs
+
+    ents = spark.createDataFrame(_SCORE_ENTS, "conv_id string, fingerprint string")
+    pairs = spark.createDataFrame(_SCORE_PAIRS, "id_a string, id_b string")
     conf = LinkConfig(algorithm="standard", max_distance=2)
-    ents = spark.createDataFrame(
-        [("a", "kitten"), ("b", "sitten"), ("c", "sittin"), ("d", "zzzzzzzzzz"),
-         ("e", "kitte"), ("f", "")],
-        "conv_id string, fingerprint string",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d"), ("e", "a"), ("f", "e"),
-         ("a", "missing")],
-        "id_a string, id_b string",
-    )
-    want = {tuple(r) for r in score_pairs(pairs, ents, conf).collect()}
-    got = {tuple(r) for r in score_pairs_grouped(pairs, ents, conf, n_buckets=4).collect()}
-    assert got == want and len(want) > 0
-
-
-def test_score_pairs_arrow_matches_pandas_udf(spark):
-    """mapInArrow scorer must equal the pandas-UDF scorer exactly."""
-    from liblevenshtein_spark.config import LinkConfig
-    from liblevenshtein_spark.operators.scoring import score_pairs, score_pairs_pandas
-
-    ents = spark.createDataFrame(
-        [("a", "kitten"), ("b", "sitten"), ("c", "sittin"), ("d", "zzzzzzzzzz"),
-         ("e", "kitte"), ("f", ""), ("g", "cafés")],
-        "conv_id string, fingerprint string",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d"), ("e", "a"), ("f", "e"),
-         ("g", "a"), ("g", "e")],
-        "id_a string, id_b string",
-    )
-    for algo in ("standard", "transposition", "merge_and_split"):
-        conf = LinkConfig(algorithm=algo, max_distance=2)
-        want = {tuple(r) for r in score_pairs_pandas(pairs, ents, conf).collect()}
-        got = {tuple(r) for r in score_pairs(pairs, ents, conf).collect()}
-        assert got == want and len(want) > 0, algo
+    matched = score_pairs(pairs, ents, conf).filter(F.col("distance") <= 2)
+    assert matched.collect()
+    plan = matched._jdf.queryExecution().executedPlan().toString()
+    # after execution AQE prints the final plan, then the initial one
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, plan
 
 
 def test_score_pairs_preserves_id_types_and_passthrough(spark):
