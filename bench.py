@@ -7,8 +7,8 @@ Prints ONE JSON line:
    (pairs_scored_per_sec — the BASELINE.md headline — cpus, row counts)}
 
 Usage: python bench.py [--cpus N] [--sf-dir PATH]
-The N-vs-4N scaling study (BASELINE.md target >= 0.8 efficiency) is
-scripts/scaling_bench.py, which runs this twice (local[8], local[32]).
+--cpus defaults to $SPARK_GRAFT_CPUS, else every core of the host. The
+driver heap is build_session's ($SPARK_GRAFT_DRIVER_MEM, default 8g).
 """
 
 from __future__ import annotations
@@ -119,7 +119,8 @@ def hard_pairs(canonical, variants: int = 6):
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--target-pairs", type=int, default=3_000_000)
     # None -> 2 x cores: Spark pays a fixed ~0.1-0.2 s Python-runner setup
@@ -130,7 +131,6 @@ def main() -> None:
     ap.add_argument("--score-partitions", type=int, default=None)
     ap.add_argument("--score-iterations", type=int, default=2)
     ap.add_argument("--hard-variants", type=int, default=96)
-    ap.add_argument("--arrow-batch", type=int, default=3072)
     args = ap.parse_args()
     if args.score_partitions is None:
         args.score_partitions = 2 * args.cpus
@@ -139,15 +139,7 @@ def main() -> None:
         app_name="liblevenshtein-spark-bench",
         master=f"local[{args.cpus}]",
         shuffle_partitions=max(args.cpus * 2, 16),
-        extra_conf={
-            "spark.ui.enabled": "false",
-            # the timed workloads push ~10 GB through Arrow; a small heap
-            # turns the late stages into GC thrash
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "28g"),
-            # ~3k-row Arrow batches: DP working set stays L2-resident in the
-            # kernel and JVM serialize overlaps Python compute (pipelining)
-            "spark.sql.execution.arrow.maxRecordsPerBatch": str(args.arrow_batch),
-        },
+        extra_conf={"spark.ui.enabled": "false"},
     )
     conf = LinkConfig(algorithm="standard", max_distance=2, blocking_scheme="segments")
 

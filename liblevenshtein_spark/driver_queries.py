@@ -1282,12 +1282,12 @@ def q_eval_pairwise_f1_sampled(spark: SparkSession, sf_dir: str,
     ratio estimators and carry no 1/r^2 factor — they are unbiased up to
     group-size effects and are what this entry reports. Truth cost drops
     from O(n^2/bands) to O((rn)^2/bands): r=0.25 -> 16x; sf1 passes
-    rate=0.05 (TRUTH_RATE_SF1 in scripts/bench_sf1.py) for a 400x cut.
+    rate=0.05 (`truth_sample_rate` in BENCH_SF1.json) for a 400x cut.
 
     NOTE: the registered DuckDB oracle is PINNED to the default rate
     (hash bucket < TRUTH_SAMPLE_RATE*10000 = 2500) — gate comparisons
     must call this with the default; a custom `rate` is for standalone
-    use (as in bench_sf1) and has no matching oracle."""
+    use (as in the BENCH_SF1.json run) and has no matching oracle."""
     from .operators.sampling import sample_corpus
 
     canon = _canonical(spark, sf_dir).select("conv_id", "fingerprint", "fp_len")
@@ -5731,7 +5731,7 @@ def q_blocking_scheme_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     schemes do I KEEP" (operators.metrics.greedy_scheme_selection). The
     GATE entry pins the full banded truth (matching its oracle); at
     sf>=1 callers pass the hash-sampled truth to the operator instead,
-    exactly as scripts/sf1_evidence_smoke.py does."""
+    exactly as the BENCH_SF1_EVIDENCE.json run did."""
     from .operators.metrics import greedy_scheme_selection
 
     return greedy_scheme_selection(

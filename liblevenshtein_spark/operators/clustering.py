@@ -212,9 +212,9 @@ def affected_subgraph(assignment: DataFrame, matches: DataFrame,
                       deleted: DataFrame, id_col: str = "conv_id"):
     """Decompose a deletion batch against a standing assignment into
     (untouched assignment rows, surviving members of affected clusters,
-    surviving intra-affected-cluster edges).  Shared by retract_entities
-    and scripts/retract_bench.py so the benchmarked edge volume is, by
-    construction, the edge set the operator actually feeds CC.
+    surviving intra-affected-cluster edges).  Used by retract_entities;
+    the edge volume in BENCH_RETRACT.json was measured through it, so it
+    is, by construction, the edge set the operator actually feeds CC.
 
     Edges are kept only when BOTH endpoints sit in the same affected
     cluster of `assignment` — an edge the assignment has not folded yet

@@ -90,7 +90,7 @@ def incremental_exact_groups(index: DataFrame, new_canon: DataFrame,
     Exchange-free lookup) plus one left-anti + min-agg on the batch side
     only. Kernel/Arrow work per batch ∝ unseen-distinct fingerprints,
     the same contraction guarantee as the batch plan
-    (`scripts/waterfall_bench.py`: 654× at 20× replication)."""
+    (BENCH_WATERFALL.json: 654× at 20× replication)."""
     hits = new_canon.join(index, fp_col).select(id_col, "rep")
     misses = new_canon.join(index.select(fp_col), fp_col, "left_anti")
     new_reps = misses.groupBy(fp_col).agg(F.min(id_col).alias("rep"))

@@ -8,6 +8,7 @@ surface."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -20,7 +21,10 @@ def build_pyfiles_zip() -> str:
     path — used by ship_package and by spark-submit wrappers
     (scripts/submit_demo.sh)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "liblevenshtein_spark_pyfiles.zip")
+    # one zip per checkout: with a shared name, a checkout whose sources are
+    # older than another checkout's zip would ship that other package
+    tag = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    zip_path = os.path.join(tempfile.gettempdir(), f"liblevenshtein_spark_pyfiles_{tag}.zip")
     # rebuild when any source file is newer than the cached zip — a stale
     # zip makes remote executors import old code (symptom: ImportError /
     # wrong results ONLY in local-cluster or real-cluster mode)
@@ -53,6 +57,33 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(build_pyfiles_zip())
 
 
+# Engine-level SQL/Arrow settings, shared by build_session and the
+# spark-submit job (scripts/linkage_job.py), which cannot call build_session
+# because its master and executors come from spark-submit.
+ENGINE_CONF = {
+    # AQE: coalesce tiny shuffle partitions, split skewed ones — the
+    # runtime half of the skew story (salting is the static half).
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow transport for the mapInArrow scorer (the JVM<->Python crossing).
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # ~3k-row Arrow batches: the DP working set stays L2-resident in the
+    # kernel and JVM serialization overlaps Python compute; the BASELINE.md
+    # sweep found a 3072-8192 plateau and chose 3072.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "3072",
+    # Spark's 10 MB broadcast default is far below what this engine's
+    # executors carry: the scoring stage re-joins texts BY ID onto the
+    # (much larger) pair stream, and broadcasting an entity text table
+    # of up to ~128 MB avoids shuffling the pair stream twice —
+    # measured 7x on a 209k-entity / 629k-pair smoke (BASELINE.md
+    # "attach-join strategy"). Beyond the threshold AQE falls back to
+    # sort-merge, which is the correct plan at billions of entities.
+    "spark.sql.autoBroadcastJoinThreshold": str(128 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def build_session(
     app_name: str = "liblevenshtein-spark",
     master: str | None = None,
@@ -63,23 +94,7 @@ def build_session(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: coalesce tiny shuffle partitions, split skewed ones — the
-        # runtime half of the skew story (salting is the static half).
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow transport for pandas UDFs (the only JVM<->Python crossings).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Spark's 10 MB broadcast default is far below what this engine's
-        # executors carry: the scoring stage re-joins texts BY ID onto the
-        # (much larger) pair stream, and broadcasting an entity text table
-        # of up to ~128 MB avoids shuffling the pair stream twice —
-        # measured 7x on a 209k-entity / 629k-pair smoke (BASELINE.md
-        # "attach-join strategy"). Beyond the threshold AQE falls back to
-        # sort-merge, which is the correct plan at billions of entities.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(128 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if shuffle_partitions is not None:

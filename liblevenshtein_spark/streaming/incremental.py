@@ -83,10 +83,16 @@ def _append(df: DataFrame, path: str) -> None:
 
 
 def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    """Read a persisted state table, or None when nothing has been published
+    to it yet: the directory is missing, or holds only a `.stage_*` dir left
+    by a kill during its first staged_append. Every other read error (a
+    corrupt footer, a schema conflict, permissions) propagates — reading it
+    as empty state would link the batch against nothing and silently miss
+    every cross-batch pair."""
+    if not os.path.isdir(path) or not any(
+            name.startswith("part-") for name in os.listdir(path)):
         return None
+    return spark.read.parquet(path)
 
 
 def _link_batch(
@@ -361,7 +367,7 @@ def start_incremental_waterfall(stream: DataFrame, state_dir: str,
     exact-contraction state ((fingerprint, rep) index + per-entity
     mapping) over a transcript stream. Downstream, the fuzzy kernel pass
     runs on the index's representatives only — per micro-batch, exactly
-    the batch's unseen fingerprints (see scripts/waterfall_incr_bench.py:
+    the batch's unseen fingerprints (see BENCH_WATERFALL_INCR.json:
     a 140k-entity replay batch contributes ZERO kernel reps)."""
     return (
         stream.writeStream.foreachBatch(

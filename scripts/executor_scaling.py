@@ -58,7 +58,6 @@ spark = build_session(
     extra_conf={{
         "spark.ui.enabled": "false",
         "spark.executor.memory": "7g",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "3072",
         # pinned slices run driver + worker JVM + executor + Python workers
         # flat-out on N cores; stock 10s/120s heartbeat deadlines produce
         # spurious executor-lost under that contention

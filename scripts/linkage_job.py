@@ -2,7 +2,7 @@
 "run via spark-submit --py-files on a multi-executor cluster").
 
     spark-submit --master <cluster> \
-        --py-files /tmp/liblevenshtein_spark_pyfiles.zip \
+        --py-files <zip from session.build_pyfiles_zip()> \
         scripts/linkage_job.py \
         --input  <transcripts parquet dir> \
         --output <output dir> \
@@ -13,8 +13,8 @@ Reads the Iceberg-shaped transcripts table, runs the full linkage pipeline
 `<output>/matches` and `<output>/clusters` as parquet. The master and
 executor topology come from spark-submit, not from this script.
 Build the --py-files zip with:
-    python -c "from liblevenshtein_spark.session import ship_package"  # or
-    scripts/submit_demo.sh  (builds zip + runs an end-to-end demo)
+    python -c "from liblevenshtein_spark.session import build_pyfiles_zip; print(build_pyfiles_zip())"
+or run scripts/submit_demo.sh (builds the zip + runs an end-to-end demo).
 """
 
 from __future__ import annotations
@@ -40,18 +40,16 @@ def main() -> None:
                     help="collapse exact-duplicate fingerprints before linkage")
     args = ap.parse_args()
 
+    from liblevenshtein_spark import LinkConfig
+    from liblevenshtein_spark.plans.pipeline import run_linkage
+    from liblevenshtein_spark.session import ENGINE_CONF
+
     # master/executors come from spark-submit; only job-level conf here
     spark = (
         SparkSession.builder.appName("liblevenshtein-spark-linkage")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "3072")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
-
-    from liblevenshtein_spark import LinkConfig
-    from liblevenshtein_spark.plans.pipeline import run_linkage
 
     conf = LinkConfig(algorithm=args.algorithm, max_distance=args.max_distance,
                       blocking_scheme=args.blocking_scheme,

@@ -3,6 +3,29 @@ dictionary file, exact candidate sets and distances."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+
+def test_tests_import_their_own_checkout():
+    """conftest puts this checkout first on sys.path, so a copy of the repo
+    tests its own package, not one at some fixed path."""
+    import liblevenshtein_spark
+
+    repo = Path(__file__).resolve().parents[1]
+    assert Path(liblevenshtein_spark.__file__).resolve().is_relative_to(repo)
+
+
+def test_executors_get_this_checkouts_package():
+    """The zip shipped to executors is built from this checkout, even when
+    another checkout built its zip later than these sources were written."""
+    import zipfile
+
+    from liblevenshtein_spark import session
+
+    with zipfile.ZipFile(session.build_pyfiles_zip()) as zf:
+        shipped = zf.read("liblevenshtein_spark/session.py")
+    assert shipped == Path(session.__file__).read_bytes()
+
 
 def test_cli_spelling_correction(spark, tmp_path, capsys, monkeypatch):
     from liblevenshtein_spark import cli

@@ -33,29 +33,43 @@ def _random_graph(rng, n_nodes, n_edges):
 
 
 def test_retract_parity_randomized(spark):
+    # six disjoint random trials, node ids prefixed t{trial}_, run as ONE
+    # graph per CC path; components never span trials, so each trial's
+    # restriction of the repaired assignment must equal its own union-find
     rng = random.Random(7)
+    nodes, edges, deleted, want = [], [], [], {}
     for trial in range(6):
-        nodes, edges = _random_graph(rng, 40, rng.randint(10, 60))
-        deleted = set(rng.sample(nodes, rng.randint(1, 12)))
-        survivors = [n for n in nodes if n not in deleted]
-        kept_edges = [(a, b) for a, b in edges
-                      if a not in deleted and b not in deleted]
-        want = union_find(survivors, kept_edges)
+        t_nodes, t_edges = _random_graph(rng, 40, rng.randint(10, 60))
+        t_deleted = set(rng.sample(t_nodes, rng.randint(1, 12)))
+        survivors = [n for n in t_nodes if n not in t_deleted]
+        kept_edges = [(a, b) for a, b in t_edges
+                      if a not in t_deleted and b not in t_deleted]
+        pre = f"t{trial}_"
+        want[trial] = {pre + n: pre + c
+                       for n, c in union_find(survivors, kept_edges).items()}
+        nodes += [pre + n for n in t_nodes]
+        edges += [(pre + a, pre + b) for a, b in t_edges]
+        deleted += [pre + d for d in t_deleted]
 
-        nodes_df = spark.createDataFrame([(n,) for n in nodes], ["conv_id"])
-        edges_df = spark.createDataFrame(edges, ["id_a", "id_b"])
-        deleted_df = spark.createDataFrame([(d,) for d in deleted], ["conv_id"])
-        for threshold in (1_000_000, 0):
-            assignment = assign_clusters(nodes_df, edges_df,
-                                         small_graph_edges=threshold)
-            got = {
-                r.conv_id: r.cluster_id
-                for r in retract_entities(
-                    assignment, edges_df, deleted_df,
-                    small_graph_edges=threshold
-                ).collect()
-            }
-            assert got == want, f"trial={trial} small_graph_edges={threshold}"
+    nodes_df = spark.createDataFrame([(n,) for n in nodes], ["conv_id"])
+    edges_df = spark.createDataFrame(edges, ["id_a", "id_b"])
+    deleted_df = spark.createDataFrame([(d,) for d in deleted], ["conv_id"])
+    for threshold in (1_000_000, 0):
+        assignment = assign_clusters(nodes_df, edges_df,
+                                     small_graph_edges=threshold)
+        got = {
+            r.conv_id: r.cluster_id
+            for r in retract_entities(
+                assignment, edges_df, deleted_df,
+                small_graph_edges=threshold
+            ).collect()
+        }
+        for trial, want_t in want.items():
+            got_t = {n: c for n, c in got.items()
+                     if n.startswith(f"t{trial}_")}
+            assert got_t == want_t, (
+                f"trial={trial} small_graph_edges={threshold}")
+        assert len(got) == sum(len(w) for w in want.values())
 
 
 def test_retract_bridge_splits_cluster(spark):

@@ -5,6 +5,8 @@ watermarked metrics stream must agree with the batch aggregation."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,6 +176,36 @@ def test_inconsistent_state_fails_loudly(spark, tmp_path):
     with pytest.raises(pyspark.errors.exceptions.base.PySparkException) as ei:
         q.awaitTermination(timeout=600)
     assert "inconsistent linkage state" in str(ei.value)
+
+
+@pytest.mark.parametrize("table", ["entities", "dict_keys"])
+def test_corrupt_state_fails_loudly(spark, tmp_path, table):
+    """A published state part file that cannot be read must fail the next
+    batch with an error naming it, not read as empty state (which would link
+    the batch against nothing and drop every cross-batch pair)."""
+    import glob
+
+    import pyspark.errors
+
+    rows, _ = gen_transcript_rows(n_base=6, dup_fraction=0.5, max_edits=1, seed=5)
+    df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+    src = str(tmp_path / "src")
+    df.coalesce(1).write.mode("append").parquet(src)
+    state = str(tmp_path / "state")
+
+    def run():
+        q = start_incremental_linkage(
+            stream_transcripts(spark, src, max_files_per_trigger=1), CONF, state)
+        q.awaitTermination(timeout=600)
+
+    run()
+    (part,) = glob.glob(f"{state}/{table}/part-*")
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    df.coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(pyspark.errors.exceptions.base.PySparkException) as ei:
+        run()
+    assert os.path.basename(part) in str(ei.value)
 
 
 def test_compact_state_dedups_and_preserves_results(spark, tmp_path):

@@ -9,7 +9,7 @@ Pure-Python mirror of exact_groups/exact_pairs/expand_rep_matches over the
 exact recursive oracle (no SparkSession — hundreds of randomized corpora
 per run via hypothesis; the Spark-side twins are gated by
 tests/test_waterfall_incremental.py, the waterfall_linkage contract entry,
-and the exceptAll parity check inside scripts/waterfall_bench.py)."""
+and the exceptAll parity recorded in BENCH_WATERFALL.json)."""
 
 from __future__ import annotations
 
